@@ -7,8 +7,9 @@ A from-scratch reimplementation of the *semantics* of shsms/ideacrawler
   (url, warc_ts, html, text, lang, status, content_type); "fetching" a URL
   is an equi-join of the frontier against that table (ref: doRequest,
   fetch.go:491-543 becomes a join);
-- the URL-seen set is an exact ``seen`` table plus sharded Bloom-filter
-  shards used as an anti-join prefilter (ref: job.duplicates map, job.go:43);
+- the URL-seen set is an exact ``seen`` table, anti-joined every round,
+  plus sharded Bloom-filter shards of it kept with each checkpointed
+  round (ref: job.duplicates map, job.go:43);
 - politeness (crawl delay, robots.txt, max-concurrent) is a deterministic
   per-round admission budget realized with window functions
   (ref: fetchbot per-host workers, fetch.go:269-454);

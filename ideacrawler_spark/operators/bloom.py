@@ -1,24 +1,31 @@
-"""Sharded Bloom-filter URL-seen state — Arrow-backed per-partition.
+"""Sharded Bloom-filter URL-seen state — Arrow-backed, vectorized numpy.
 
 The reference's seen-set is one in-memory Go map guarded by a mutex
 (job.duplicates, job.go:43,841-871) — at 10^10 URLs that is neither
 memory-feasible nor parallel. Here:
 
-- the seen-set's EXACT table stays authoritative (bit-for-bit guarantee);
-- a Bloom filter sharded by ``url_hash % n_shards`` prefilters the
-  anti-join: rows the shard proves unseen (the overwhelming majority in a
-  growing crawl) skip the expensive join entirely; only maybe-seen rows
-  (true hits + false positives) take the exact path. False negatives are
-  impossible, so results are identical with the filter on or off — the
-  e2e suite runs both ways to prove it;
+- the seen-set's EXACT table stays authoritative (bit-for-bit guarantee):
+  every round, checkpointed or not, drops seen rows with the plain
+  anti-join (operators/dedup.py ``anti_join_seen``) and does NOT probe
+  the filter — a probe here cannot prune, since every key in ``seen``
+  is maybe-seen (no false negatives) and the exact join still has to
+  test every candidate;
+- a Bloom filter sharded by ``url_hash % n_shards`` mirrors the seen-set
+  (superset invariant). A checkpointed crawl folds each round's new keys
+  into it and commits the shard dir with the round; ``maybe_seen`` is its
+  membership probe (False ⇒ PROVABLY unseen, True ⇒ check exactly);
 - shards are numpy bitsets persisted per round next to the engine
-  checkpoint (parquet+manifest here; Iceberg snapshots in production) and
-  updated inside ``applyInPandas`` — each task touches exactly one shard
-  file, the batch arrives as Arrow, and the membership test is vectorized
-  numpy over the whole batch (no per-row Python);
+  checkpoint (parquet+manifest here; Iceberg snapshots in production).
+  The shard count fixes the file layout only: the fold runs at the
+  caller's ``width`` (the engine's shuffle partitions), one
+  ``applyInPandas`` group — one file write — per shard. Batches arrive as
+  Arrow and every membership test is vectorized numpy (no per-row Python);
 - ALL shard IO goes through ``operators/shardfs.py`` (pyarrow.fs), so a
   checkpoint dir on hdfs:// or s3:// works from executors without a
-  shared local disk — the round-1 local-``os.path`` dependence is gone.
+  shared local disk.
+
+The probe and fold scaffolding below is shared with the cuckoo filter
+(operators/cuckoo.py), which supplies its own per-shard kernels.
 
 Bit addressing: k=7 indexes per key from the 64-bit xxhash via the
 Kirsch-Mitzenmacher construction idx_i = (h1 + i*h2) mod m with
@@ -28,13 +35,14 @@ h1 = low 32 bits, h2 = high 32 bits | 1.
 from __future__ import annotations
 
 import io
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ideacrawler_spark.operators import shardfs
 
@@ -42,9 +50,70 @@ N_SHARDS = 64
 M_BITS = 1 << 22          # 4 Mbit/shard → 64 shards ≈ 32 MB; fpr ~1% at ~25M keys
 K_HASHES = 7
 
+# (shard_dir, shard) → membership test over that shard's int64 hashes
+Member = Callable[[str, int], Callable[[np.ndarray], np.ndarray]]
+
 
 def shard_of(hash_col, n_shards: int = N_SHARDS):
     return F.pmod(hash_col, F.lit(n_shards)).cast("int")
+
+
+def fold_shards(keys: DataFrame, prev_dir: str | None, out_dir: str,
+                prefix: str, fold_one: Callable[[str, int, np.ndarray], None],
+                hash_col: str, n_shards: int, width: int) -> None:
+    """Copy round r-1's shard files forward, then ``fold_one(out_dir,
+    shard, hashes)`` each shard that has new keys, over ``width`` tasks.
+    The copy overwrites through tmp + move, so a resumed round never
+    keeps a shard torn by a crashed attempt."""
+    shardfs.makedirs(out_dir)
+    if prev_dir:
+        for name in shardfs.listdir(prev_dir):
+            if name.startswith(prefix) and not name.endswith(".tmp"):
+                shardfs.copy_file(shardfs.join(prev_dir, name),
+                                  shardfs.join(out_dir, name))
+
+    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        shard = int(pdf["shard"].iloc[0])
+        fold_one(out_dir, shard, pdf["h"].to_numpy())
+        return pd.DataFrame({"shard": [shard], "n": [len(pdf)]})
+
+    (
+        keys.select(F.col(hash_col).alias("h"),
+                    shard_of(F.col(hash_col), n_shards).alias("shard"))
+        .repartition(width, "shard")
+        .groupBy("shard")
+        .applyInPandas(fold, schema="shard int, n long")
+        .collect()
+    )
+
+
+def probe_shards(candidates: DataFrame, shard_dir: str, member: Member,
+                 hash_col: str, n_shards: int) -> DataFrame:
+    """Add ``_maybe_seen``: False ⇒ PROVABLY unseen, True ⇒ check exactly.
+    One ``mapInPandas`` over ``n_shards`` partitions keyed by shard, so
+    each task loads only the shards its rows hash to."""
+
+    def probe(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        loaded: dict = {}
+        for pdf in it:
+            h = pdf[hash_col].to_numpy()
+            shards = np.mod(h, n_shards)   # floor mod = Spark's pmod
+            out = np.zeros(len(pdf), dtype=bool)
+            for s in np.unique(shards).tolist():
+                if s not in loaded:
+                    loaded[s] = member(shard_dir, s)
+                mask = shards == s
+                out[mask] = loaded[s](h[mask])
+            yield pdf.assign(_maybe_seen=out)
+
+    # a fresh StructType: .add would mutate the candidate frame's schema
+    schema = T.StructType(
+        list(candidates.schema.fields)
+        + [T.StructField("_maybe_seen", T.BooleanType())]
+    )
+    return candidates.repartition(
+        n_shards, shard_of(F.col(hash_col), n_shards)
+    ).mapInPandas(probe, schema=schema)
 
 
 def _indexes(hashes: np.ndarray, m: int = M_BITS, k: int = K_HASHES) -> np.ndarray:
@@ -67,104 +136,35 @@ def _load_shard(bloom_dir: str, shard: int) -> np.ndarray:
     return np.zeros(M_BITS // 8, dtype=np.uint8)
 
 
-def _save_shard(path: str, arr_bytes: bytes) -> None:
-    shardfs.write_bytes_atomic(path, arr_bytes)
+def _fold(out_dir: str, shard: int, h: np.ndarray) -> None:
+    arr = _load_shard(out_dir, shard)
+    flat = _indexes(h).reshape(-1)
+    np.bitwise_or.at(arr, flat >> 3, (1 << (flat & 7)).astype(np.uint8))
+    buf = io.BytesIO()
+    np.save(buf, arr)
+    shardfs.write_bytes_atomic(_shard_path(out_dir, shard), buf.getvalue())
+
+
+def _member(bloom_dir: str, shard: int):
+    arr = _load_shard(bloom_dir, shard)
+
+    def test(h: np.ndarray) -> np.ndarray:
+        idx = _indexes(h)
+        return ((arr[idx >> 3] >> (idx & 7)) & 1).all(axis=1)
+
+    return test
 
 
 def update_shards(seen_new: DataFrame, prev_dir: str | None, out_dir: str,
-                  hash_col: str = "key_hash", n_shards: int = N_SHARDS) -> None:
+                  hash_col: str = "key_hash", n_shards: int = N_SHARDS, *,
+                  width: int) -> None:
     """Fold new keys into the Bloom shards: read round r-1 shards, write
-    round r shards (copy-forward untouched ones). One applyInPandas group
-    per shard — the task-local file IS the Arrow-backed partition state."""
-    shardfs.makedirs(out_dir)
-    if prev_dir:
-        for name in shardfs.listdir(prev_dir):
-            if name.startswith("shard=") and not name.endswith(".tmp"):
-                dst = shardfs.join(out_dir, name)
-                if not shardfs.exists(dst):
-                    shardfs.copy_file(shardfs.join(prev_dir, name), dst)
-
-    df = seen_new.select(F.col(hash_col).alias("h")).withColumn(
-        "shard", shard_of(F.col("h"), n_shards)
-    )
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame({"shard": [], "n": []})
-        shard = int(pdf["shard"].iloc[0])
-        arr = _load_shard(out_dir, shard)
-        idx = _indexes(pdf["h"].to_numpy())
-        flat = idx.reshape(-1)
-        np.bitwise_or.at(arr, flat >> 3, (1 << (flat & 7)).astype(np.uint8))
-        buf = io.BytesIO()
-        np.save(buf, arr)
-        _save_shard(_shard_path(out_dir, shard), buf.getvalue())
-        return pd.DataFrame({"shard": [shard], "n": [len(pdf)]})
-
-    (
-        df.repartition(n_shards, "shard")
-        .groupBy("shard")
-        .applyInPandas(fold, schema="shard int, n long")
-        .collect()
-    )
+    round r shards (untouched ones copied forward)."""
+    fold_shards(seen_new, prev_dir, out_dir, "shard=", _fold,
+                hash_col, n_shards, width)
 
 
 def maybe_seen(candidates: DataFrame, bloom_dir: str,
                hash_col: str = "url_hash", n_shards: int = N_SHARDS) -> DataFrame:
-    """Add a ``_maybe_seen`` boolean: False ⇒ PROVABLY unseen (skip the
-    exact anti-join), True ⇒ check exactly. Vectorized numpy membership
-    per Arrow batch; each task reads only the shards its rows hash to."""
-    cols = candidates.columns
-
-    def probe(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, np.ndarray] = {}
-        for pdf in it:
-            if not len(pdf):
-                pdf["_maybe_seen"] = pd.Series([], dtype=bool)
-                yield pdf
-                continue
-            h = pdf[hash_col].to_numpy()
-            shards = (np.mod(h, n_shards) + n_shards) % n_shards
-            out = np.zeros(len(pdf), dtype=bool)
-            for s in np.unique(shards):
-                if s not in cache:
-                    cache[int(s)] = _load_shard(bloom_dir, int(s))
-                arr = cache[int(s)]
-                mask = shards == s
-                idx = _indexes(h[mask])
-                bits = (arr[idx >> 3] >> (idx & 7)) & 1
-                out[mask] = bits.all(axis=1)
-            pdf = pdf.copy()
-            pdf["_maybe_seen"] = out
-            yield pdf
-
-    # NB: StructType.add MUTATES the receiver — build a fresh schema so
-    # probing the same DataFrame twice can't duplicate the column
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        list(candidates.schema.fields)
-        + [T.StructField("_maybe_seen", T.BooleanType())]
-    )
-    # partition by shard so each task reads few shard files
-    return candidates.repartition(
-        n_shards, shard_of(F.col(hash_col), n_shards)
-    ).mapInPandas(probe, schema=schema)
-
-
-def bloom_anti_join_seen(candidates: DataFrame, seen: DataFrame,
-                         bloom_dir: str, key: str = "url_norm",
-                         seen_key: str = "key", n_shards: int = N_SHARDS) -> DataFrame:
-    """Seen-set anti-join with Bloom prefilter: provably-new rows bypass
-    the join; maybe-seen rows take the exact anti-join. Result is
-    identical to the plain anti-join (no false negatives)."""
-    from ideacrawler_spark.operators.dedup import anti_join_seen
-
-    flagged = maybe_seen(
-        candidates.withColumn("url_hash", F.xxhash64(F.col(key))), bloom_dir,
-        n_shards=n_shards,
-    )
-    fresh_fast = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
-    to_check = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
-    checked = anti_join_seen(to_check, seen, key=key, seen_key=seen_key)
-    return fresh_fast.unionByName(checked)
+    """Flag ``candidates`` against the Bloom shards in ``bloom_dir``."""
+    return probe_shards(candidates, bloom_dir, _member, hash_col, n_shards)

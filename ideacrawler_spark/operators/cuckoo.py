@@ -1,7 +1,9 @@
 """Sharded cuckoo-filter URL-seen state — the Bloom alternative.
 
-Same contract as operators/bloom.py (update shards per round, probe as an
-anti-join prefilter, false negatives impossible) with cuckoo semantics:
+Same contract and the same probe/fold scaffolding as operators/bloom.py
+(shards folded per round at the caller's width, ``maybe_seen`` as the
+membership probe, false negatives impossible); this module supplies only
+the per-shard kernels, with cuckoo semantics:
 16-bit fingerprints in 4-slot buckets, two candidate buckets per key
 (partial-key cuckoo hashing, Fan et al. 2014). Advantages over Bloom at
 the same memory: higher lookup locality (2 buckets vs k probes) and
@@ -10,7 +12,7 @@ grows — but kept for parity with the paper).
 
 Safety valve: if an insert exceeds the kick budget the shard sets an
 ``overflow`` flag and every lookup in that shard answers maybe-seen —
-degrading to the exact anti-join, never to a false negative.
+degrading to "check exactly", never to a false negative.
 
 Layout per shard file (.npz): ``table`` uint16 (NB, 4), ``overflow``
 uint8 scalar. All probes are vectorized numpy over Arrow batches.
@@ -19,15 +21,13 @@ uint8 scalar. All probes are vectorized numpy over Arrow batches.
 from __future__ import annotations
 
 import io
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ideacrawler_spark.operators import shardfs
+from ideacrawler_spark.operators.bloom import fold_shards, probe_shards
 
 N_SHARDS = 64
 N_BUCKETS = 1 << 16        # 65536 buckets × 4 slots × 2B = 512 KB/shard
@@ -90,97 +90,41 @@ def _insert_one(table: np.ndarray, h: int) -> bool:
     return False
 
 
+def _fold(out_dir: str, shard: int, h: np.ndarray) -> None:
+    table, overflow = _load(out_dir, shard)
+    if not overflow:
+        for x in h:
+            if not _insert_one(table, int(x)):
+                overflow = True
+                break
+    buf = io.BytesIO()
+    np.savez(buf, table=table, overflow=np.uint8(overflow))
+    shardfs.write_bytes_atomic(_shard_path(out_dir, shard), buf.getvalue())
+
+
+def _member(d: str, shard: int):
+    table, overflow = _load(d, shard)
+
+    def test(h: np.ndarray) -> np.ndarray:
+        if overflow:
+            return np.ones(len(h), dtype=bool)
+        f = _fingerprint(h)
+        i1 = _bucket1(h)
+        i2 = _alt_bucket(i1, f).astype(np.int64)
+        return (table[i1] == f[:, None]).any(axis=1) | (
+            table[i2] == f[:, None]
+        ).any(axis=1)
+
+    return test
+
+
 def update_shards(seen_new: DataFrame, prev_dir: str | None, out_dir: str,
-                  hash_col: str = "key_hash", n_shards: int = N_SHARDS) -> None:
-    shardfs.makedirs(out_dir)
-    if prev_dir:
-        for name in shardfs.listdir(prev_dir):
-            if name.startswith("cuckoo=") and not name.endswith(".tmp"):
-                dst = shardfs.join(out_dir, name)
-                if not shardfs.exists(dst):
-                    shardfs.copy_file(shardfs.join(prev_dir, name), dst)
-
-    df = seen_new.select(F.col(hash_col).alias("h")).withColumn(
-        "shard", F.pmod(F.col("h"), F.lit(n_shards)).cast("int")
-    )
-
-    def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame({"shard": [], "n": []})
-        shard = int(pdf["shard"].iloc[0])
-        table, overflow = _load(out_dir, shard)
-        if not overflow:
-            for h in pdf["h"].to_numpy():
-                if not _insert_one(table, int(h)):
-                    overflow = True
-                    break
-        buf = io.BytesIO()
-        np.savez(buf, table=table, overflow=np.uint8(overflow))
-        shardfs.write_bytes_atomic(_shard_path(out_dir, shard), buf.getvalue())
-        return pd.DataFrame({"shard": [shard], "n": [len(pdf)]})
-
-    (
-        df.repartition(n_shards, "shard")
-        .groupBy("shard")
-        .applyInPandas(fold, schema="shard int, n long")
-        .collect()
-    )
+                  hash_col: str = "key_hash", n_shards: int = N_SHARDS, *,
+                  width: int) -> None:
+    fold_shards(seen_new, prev_dir, out_dir, "cuckoo=", _fold,
+                hash_col, n_shards, width)
 
 
 def maybe_seen(candidates: DataFrame, cuckoo_dir: str,
                hash_col: str = "url_hash", n_shards: int = N_SHARDS) -> DataFrame:
-    def probe(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[int, tuple] = {}
-        for pdf in it:
-            if not len(pdf):
-                pdf["_maybe_seen"] = pd.Series([], dtype=bool)
-                yield pdf
-                continue
-            h = pdf[hash_col].to_numpy()
-            shards = (np.mod(h, n_shards) + n_shards) % n_shards
-            out = np.zeros(len(pdf), dtype=bool)
-            for s in np.unique(shards):
-                if s not in cache:
-                    cache[int(s)] = _load(cuckoo_dir, int(s))
-                table, overflow = cache[int(s)]
-                mask = shards == s
-                if overflow:
-                    out[mask] = True
-                    continue
-                hs = h[mask]
-                f = _fingerprint(hs)
-                i1 = _bucket1(hs)
-                i2 = _alt_bucket(i1, f).astype(np.int64)
-                hit = (table[i1] == f[:, None]).any(axis=1) | (
-                    table[i2] == f[:, None]
-                ).any(axis=1)
-                out[mask] = hit
-            pdf = pdf.copy()
-            pdf["_maybe_seen"] = out
-            yield pdf
-
-    from pyspark.sql import types as T
-
-    # fresh StructType: .add would mutate the candidate frame's schema
-    schema = T.StructType(
-        list(candidates.schema.fields)
-        + [T.StructField("_maybe_seen", T.BooleanType())]
-    )
-    return candidates.repartition(
-        n_shards, F.pmod(F.col(hash_col), F.lit(n_shards)).cast("int")
-    ).mapInPandas(probe, schema=schema)
-
-
-def cuckoo_anti_join_seen(candidates: DataFrame, seen: DataFrame,
-                          cuckoo_dir: str, key: str = "url_norm",
-                          seen_key: str = "key",
-                          n_shards: int = N_SHARDS) -> DataFrame:
-    from ideacrawler_spark.operators.dedup import anti_join_seen
-
-    flagged = maybe_seen(
-        candidates.withColumn("url_hash", F.xxhash64(F.col(key))), cuckoo_dir,
-        n_shards=n_shards,
-    )
-    fresh_fast = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
-    to_check = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen", "url_hash")
-    return fresh_fast.unionByName(anti_join_seen(to_check, seen, key, seen_key))
+    return probe_shards(candidates, cuckoo_dir, _member, hash_col, n_shards)

@@ -10,9 +10,11 @@ Batch equivalents:
 - ACROSS rounds: left-anti join against the exact ``seen`` table
   (key = the exact string the reference would have used: nurl for links,
   the raw seed string for seeds — job.go:776 inserts the seed unnormalized);
-- at scale the anti-join is prefiltered by sharded Bloom filters
-  (operators/bloom.py): definitely-new rows skip the join entirely, the
-  exact table stays authoritative so the seen-set remains bit-for-bit.
+- the exact table is authoritative, so the seen-set remains bit-for-bit;
+  a checkpointed crawl also keeps Bloom/cuckoo shards of it
+  (operators/bloom.py, operators/cuckoo.py), but the round does not
+  probe them: with no false negatives a probe cannot drop a candidate
+  from the exact join.
 """
 
 from __future__ import annotations
@@ -60,10 +62,9 @@ def anti_join_seen(candidates: DataFrame, seen: DataFrame,
     hash-led composite, and the seen side carries a SHUFFLE_HASH hint: a
     hash anti-probe needs no sort on either side (the hash-led key only
     paid off by making sort-merge compares cheap). The per-partition build
-    side is |seen| / shuffle-partitions — bounded; at the 10^10 design
-    point the production path prefilters through the Bloom/cuckoo shards
-    (operators/bloom.py) so the exact join only ever sees the maybe-seen
-    remainder."""
+    side is |seen| / shuffle-partitions — bounded. Checkpointed rounds
+    take this path too; they fold the Bloom/cuckoo shards but do not
+    probe them here."""
     if partitioned:
         s = seen.select(F.col(seen_key).alias(key)).hint("SHUFFLE_HASH")
         return candidates.join(s, on=[key], how="left_anti")

@@ -16,10 +16,11 @@ the shard state live in the cluster filesystem with zero code change —
 the Iceberg-table layout this stands in for (PLANS.md) would do the same
 through its catalog.
 
-Writes are tmp-file + move within one filesystem. Each shard is touched
-by exactly one task per update job (groupBy shard), so there is no
-concurrent writer; the move only guards against torn reads by the next
-round's probes.
+Writes and copies are tmp-file + move within one filesystem and always
+overwrite. Each shard is one ``applyInPandas`` group per update job (a
+task may fold several shards, but no two tasks share one), so there is
+no concurrent writer; the move guards against torn files left by a
+crashed attempt and torn reads by a later probe or fold.
 """
 
 from __future__ import annotations
@@ -38,13 +39,6 @@ def fs_and_path(path: str) -> Tuple[object, str]:
 
 def join(base: str, name: str) -> str:
     return base.rstrip("/") + "/" + name
-
-
-def exists(path: str) -> bool:
-    from pyarrow import fs as pafs
-
-    f, p = fs_and_path(path)
-    return f.get_file_info(p).type != pafs.FileType.NotFound
 
 
 def makedirs(path: str) -> None:
@@ -74,12 +68,7 @@ def read_bytes(path: str) -> Optional[bytes]:
         return s.read()
 
 
-def write_bytes_atomic(path: str, data: bytes) -> None:
-    """Write via sibling tmp + move (single-writer per shard per job)."""
-    f, p = fs_and_path(path)
-    tmp = p + ".tmp"
-    with f.open_output_stream(tmp) as s:
-        s.write(data)
+def _move_over(f, tmp: str, p: str) -> None:
     try:
         f.move(tmp, p)
     except OSError:
@@ -88,7 +77,17 @@ def write_bytes_atomic(path: str, data: bytes) -> None:
         f.move(tmp, p)
 
 
+def write_bytes_atomic(path: str, data: bytes) -> None:
+    """Write via sibling tmp + move (single-writer per shard per job)."""
+    f, p = fs_and_path(path)
+    with f.open_output_stream(p + ".tmp") as s:
+        s.write(data)
+    _move_over(f, p + ".tmp", p)
+
+
 def copy_file(src: str, dst: str) -> None:
+    """Copy via sibling tmp + move, replacing ``dst`` if it exists."""
     f_src, p_src = fs_and_path(src)
-    _, p_dst = fs_and_path(dst)
-    f_src.copy_file(p_src, p_dst)
+    f_dst, p_dst = fs_and_path(dst)
+    f_src.copy_file(p_src, p_dst + ".tmp")
+    _move_over(f_dst, p_dst + ".tmp", p_dst)

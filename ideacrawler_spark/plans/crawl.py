@@ -19,6 +19,7 @@ restarts from it — frontier offsets + seen-set + counters included.
 from __future__ import annotations
 
 import threading
+import time
 from typing import List, Optional
 from urllib.parse import urlsplit
 
@@ -217,7 +218,7 @@ class CrawlEngine:
             self.seen = self.catalog.write_aux(self.seen, "seen_init")
         self._seen_parts = [self.seen]
         # Bloom shards mirror the seen-set (superset invariant: every seen
-        # key must be folded in before it can be anti-joined against)
+        # key is folded in); the round's exact anti-join does not read them
         self.bloom_dir = None
         if self.ckpt:
             update_shards = self._update_shards_fn()
@@ -225,7 +226,7 @@ class CrawlEngine:
             init_dir = self.catalog.aux_path("bloom_init")
             update_shards(
                 self.seen.select(F.xxhash64("key").alias("key_hash")),
-                None, init_dir, n_shards=self.bloom_shards,
+                None, init_dir, n_shards=self.bloom_shards, width=self.nparts,
             )
             self.bloom_dir = init_dir
 
@@ -381,22 +382,18 @@ class CrawlEngine:
                                      robots_denied=0, errors=0))
             self.round += 1
             return 0
+        _t_start = time.monotonic()
         res = run_round(
             self.spark, self.spec, rnd, self.frontier, self.seen,
             self.pages, self.robots_host,
             fetch_seq_offset=self.fetch_seq_offset,
             seq_offset=self.seq_offset,
             shuffle_partitions=self.nparts,
-            bloom_dir=self.bloom_dir,
-            bloom_shards=self.bloom_shards,
-            seen_filter=self.seen_filter,
             global_budget=global_budget,
             n_pending=n_pending,
             host_budget_max=self._host_budget_max,
         )
-        import time as _time
-
-        _t_plan_done = _time.monotonic()
+        _t_plan_done = time.monotonic()
         # ALL SEVEN round actions run CONCURRENTLY: the single counters
         # collect (which computes the whole round pipeline) and the six
         # output materializations. They share the round's persisted
@@ -429,11 +426,7 @@ class CrawlEngine:
         outlinks = f_outlinks.result()
         frontier_next = f_frontier.result()
         seen_delta = f_seen.result()
-        _t_writes = _time.monotonic()
-        # per-phase wall times of the last rounds (diagnostics; bounded)
-        self.step_timings.append(dict(
-            round=rnd, actions_s=round(_t_writes - _t_plan_done, 3)))
-        del self.step_timings[:-64]
+        _t_writes = time.monotonic()
         if self.ckpt:
             # fold this round's new keys into the filter shards; the new
             # shard directory becomes part of the round's atomic commit
@@ -443,8 +436,10 @@ class CrawlEngine:
             update_shards(
                 res.seen_new.select(F.xxhash64("key").alias("key_hash")),
                 self.bloom_dir, bloom_next, n_shards=self.bloom_shards,
+                width=self.nparts,
             )
             self.bloom_dir = bloom_next
+        _t_shards = time.monotonic()
         m["logged_out"] = int(cnt["n_logged_out"] or 0)
         if m["logged_out"] > 0:
             # the login-session guard tripped: the reference pushes
@@ -505,6 +500,17 @@ class CrawlEngine:
         self._order.append(order)
         self._outlinks.append(outlinks)
         self._commit_round(rnd)
+        # per-phase wall times of the last rounds (diagnostics; bounded):
+        # run_round's plan build, the seven concurrent actions, the filter
+        # shard fold, then bookkeeping + compaction (when due) + commit
+        _t_commit = time.monotonic()
+        self.step_timings.append(dict(
+            round=rnd,
+            plan_s=round(_t_plan_done - _t_start, 3),
+            actions_s=round(_t_writes - _t_plan_done, 3),
+            shard_update_s=round(_t_shards - _t_writes, 3),
+            commit_s=round(_t_commit - _t_shards, 3)))
+        del self.step_timings[:-64]
         if self.ckpt and compacted_this_round and self.expire_on_compact:
             # AFTER the commit: a crash mid-expire leaves a fully
             # resumable checkpoint (expiry only deletes superseded state)

@@ -211,9 +211,6 @@ def run_round(
     fetch_seq_offset: int,
     seq_offset: int,
     shuffle_partitions: int = 32,
-    bloom_dir: Optional[str] = None,
-    bloom_shards: int = 64,
-    seen_filter: str = "bloom",
     global_budget: Optional[int] = None,
     n_pending: Optional[int] = None,
     host_budget_max: Optional[int] = None,
@@ -427,22 +424,12 @@ def run_round(
     elig_counts = eligible.agg(F.count("*").alias("n_eligible"))
 
     # ---- dedup: in-round first occurrence, then anti-join the seen table.
-    #      With a Bloom checkpoint, provably-new rows skip the join (D1).
+    #      firsts comes straight out of the groupBy(url_norm) — the anti-
+    #      join reuses that exchange and hash-probes the seen side unsorted
+    #      (D1). Checkpointed rounds take the same path: the filter shards
+    #      are folded per round but not probed here.
     firsts = first_occurrence(eligible)
-    if bloom_dir is not None and seen_filter == "cuckoo":
-        from ideacrawler_spark.operators.cuckoo import cuckoo_anti_join_seen
-
-        new_firsts = cuckoo_anti_join_seen(
-            firsts, seen, bloom_dir, n_shards=bloom_shards).persist()
-    elif bloom_dir is not None:
-        from ideacrawler_spark.operators.bloom import bloom_anti_join_seen
-
-        new_firsts = bloom_anti_join_seen(
-            firsts, seen, bloom_dir, n_shards=bloom_shards).persist()
-    else:
-        # firsts comes straight out of the groupBy(url_norm) — the anti-
-        # join reuses that exchange and hash-probes the seen side unsorted
-        new_firsts = anti_join_seen(firsts, seen, partitioned=True).persist()
+    new_firsts = anti_join_seen(firsts, seen, partitioned=True).persist()
     new_counts = new_firsts.agg(F.count("*").alias("n_new"))
 
     # ---- cross-domain quirk (job.go:842-845): mark seen, don't enqueue.

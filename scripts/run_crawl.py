@@ -2,7 +2,7 @@
 
 Usage (local sandbox):
     spark-submit --master local[32] \
-        --py-files ideacrawler_spark.zip \
+        --py-files dist/ideacrawler_spark.zip \
         scripts/run_crawl.py --spec job.json --pages pages_dir \
         [--robots robots_dir] [--pushes pushes.json] \
         --checkpoint ckpt_dir --out out_dir

@@ -1,7 +1,7 @@
 """Bloom-shard seen-set (D1-approx) + checkpoint/crash-resume (M4).
 
 - unit: shard update + membership (no false negatives, low fp rate);
-- e2e: a checkpointed crawl (Bloom prefilter ON) is bit-for-bit identical
+- e2e: a checkpointed crawl (Bloom shards folded per round) is bit-for-bit identical
   to the in-memory exact-only crawl;
 - resume: kill after round k, resume from the commit manifests, final
   state identical to the uninterrupted run (SURVEY.md §5c).
@@ -22,7 +22,7 @@ from ideacrawler_spark.refsim import simulate
 def test_bloom_shard_roundtrip(spark, tmp_path):
     d1 = str(tmp_path / "b1")
     keys = spark.range(0, 5000).select(F.xxhash64("id").alias("key_hash"))
-    bloom.update_shards(keys, None, d1)
+    bloom.update_shards(keys, None, d1, width=8)
     # every inserted key must be maybe-seen (no false negatives)
     cand = spark.range(0, 5000).select(F.xxhash64("id").alias("url_hash"))
     flagged = bloom.maybe_seen(cand, d1)
@@ -34,7 +34,7 @@ def test_bloom_shard_roundtrip(spark, tmp_path):
     # incremental update keeps the superset invariant
     d2 = str(tmp_path / "b2")
     more = spark.range(50000, 51000).select(F.xxhash64("id").alias("key_hash"))
-    bloom.update_shards(more, d1, d2)
+    bloom.update_shards(more, d1, d2, width=8)
     both = spark.range(0, 5000).union(spark.range(50000, 51000)).select(
         F.xxhash64("id").alias("url_hash"))
     assert bloom.maybe_seen(both, d2).filter(~F.col("_maybe_seen")).count() == 0
@@ -47,13 +47,13 @@ def test_bloom_shards_on_fs_uri(spark, tmp_path):
     executors do NOT share the driver's local disk."""
     d1 = "file://" + str(tmp_path / "u1")
     keys = spark.range(0, 3000).select(F.xxhash64("id").alias("key_hash"))
-    bloom.update_shards(keys, None, d1)
+    bloom.update_shards(keys, None, d1, width=8)
     cand = spark.range(0, 3000).select(F.xxhash64("id").alias("url_hash"))
     assert bloom.maybe_seen(cand, d1).filter(~F.col("_maybe_seen")).count() == 0
     # copy-forward between rounds across the URI path too
     d2 = "file://" + str(tmp_path / "u2")
     more = spark.range(9000, 9500).select(F.xxhash64("id").alias("key_hash"))
-    bloom.update_shards(more, d1, d2)
+    bloom.update_shards(more, d1, d2, width=8)
     both = spark.range(0, 3000).union(spark.range(9000, 9500)).select(
         F.xxhash64("id").alias("url_hash"))
     assert bloom.maybe_seen(both, d2).filter(~F.col("_maybe_seen")).count() == 0
@@ -61,7 +61,7 @@ def test_bloom_shards_on_fs_uri(spark, tmp_path):
     from ideacrawler_spark.operators import cuckoo
 
     c1 = "file://" + str(tmp_path / "c1")
-    cuckoo.update_shards(keys, None, c1)
+    cuckoo.update_shards(keys, None, c1, width=8)
     assert cuckoo.maybe_seen(cand, c1).filter(~F.col("_maybe_seen")).count() == 0
 
 
@@ -94,6 +94,13 @@ def test_checkpointed_bloom_crawl_matches_refsim(spark, web, web_dfs, tmp_path):
     want = [(o["fetch_seq"], o["url"]) for o in golden.order]
     assert got == want
     assert {r["key"] for r in out["seen"].collect()} == set(golden.seen)
+    # the engine's own per-round phase record
+    assert eng.step_timings
+    for t in eng.step_timings:
+        assert set(t) == {"round", "plan_s", "actions_s", "shard_update_s",
+                          "commit_s"}
+        assert all(v >= 0 for v in t.values())
+    assert any(t["shard_update_s"] > 0 for t in eng.step_timings)
 
 
 def test_crash_resume_equivalence(spark, web, web_dfs, tmp_path):
@@ -117,6 +124,51 @@ def test_crash_resume_equivalence(spark, web, web_dfs, tmp_path):
                        checkpoint_dir=ck, shuffle_partitions=8, bloom_shards=8)
     out2 = eng2.run(resume=True)
     assert _final_state(out2) == ref_state
+
+
+def test_resume_overwrites_torn_shard_copy(spark, web, web_dfs, tmp_path):
+    """A crash while round r+1 copied its Bloom shards forward leaves a
+    torn shard in that uncommitted round's ``bloom`` dir. The resumed
+    round must overwrite it rather than keep it (np.load would fail on
+    every later round), and the resumed crawl must still match refsim."""
+    import os
+    import shutil
+
+    pages, robots, _, pushes = web
+    pages_df, robots_df, _, _ = web_dfs
+    full_spec = _spec(max_rounds=8, depth=3)
+    golden = simulate(full_spec, pages, robots, pushes)
+    ck = str(tmp_path / "torn")
+    r = 1
+    cut = CrawlEngine(spark, dataclasses.replace(full_spec, max_rounds=r + 1),
+                      pages_df, robots_df, pushes, checkpoint_dir=ck,
+                      shuffle_partitions=8, bloom_shards=8).run()
+    torn_dir = f"{ck}/round={r + 1}/bloom"
+    shutil.copytree(f"{ck}/round={r}/bloom", torn_dir)
+    assert not os.path.exists(f"{ck}/round={r + 1}/_COMMIT.json")
+    # tear the shard the resumed rounds fold most new keys into
+    done = {row["key"] for row in cut["seen"].collect()}
+    later = [(k,) for k in golden.seen if k not in done]
+    by_shard = spark.createDataFrame(later, "key string").groupBy(
+        F.pmod(F.xxhash64("key"), F.lit(8)).alias("s")).count()
+    s = by_shard.orderBy(F.desc("count"), "s").first()["s"]
+    shard = bloom._shard_path(torn_dir, s)
+    assert os.path.exists(shard)
+    with open(shard, "r+b") as f:
+        f.truncate(os.path.getsize(shard) // 2)
+    eng = CrawlEngine(spark, full_spec, pages_df, robots_df, pushes,
+                      checkpoint_dir=ck, shuffle_partitions=8, bloom_shards=8)
+    out = eng.run(resume=True)
+    assert out["rounds"] > r + 2   # later rounds folded into the rewritten shard
+    got = [(r["fetch_seq"], r["url"]) for r in
+           out["order"].orderBy("fetch_seq").collect()]
+    assert got == [(o["fetch_seq"], o["url"]) for o in golden.order]
+    assert {r["key"] for r in out["seen"].collect()} == set(golden.seen)
+    # the last committed shards load and hold every seen key
+    seen = spark.createDataFrame([(k,) for k in golden.seen], "key string")
+    flagged = bloom.maybe_seen(seen.select(F.xxhash64("key").alias("url_hash")),
+                               eng.bloom_dir, n_shards=8)
+    assert flagged.filter(~F.col("_maybe_seen")).count() == 0
 
 
 def test_cancel_resume_equivalence(spark, web, web_dfs, tmp_path):
@@ -163,7 +215,7 @@ def test_cuckoo_shard_roundtrip(spark, tmp_path):
 
     d1 = str(tmp_path / "c1")
     keys = spark.range(0, 5000).select(F.xxhash64("id").alias("key_hash"))
-    cuckoo.update_shards(keys, None, d1, n_shards=8)
+    cuckoo.update_shards(keys, None, d1, n_shards=8, width=8)
     cand = spark.range(0, 5000).select(F.xxhash64("id").alias("url_hash"))
     flagged = cuckoo.maybe_seen(cand, d1, n_shards=8)
     assert flagged.filter(~F.col("_maybe_seen")).count() == 0  # no false negs
@@ -173,7 +225,7 @@ def test_cuckoo_shard_roundtrip(spark, tmp_path):
     # incremental update keeps the superset invariant
     d2 = str(tmp_path / "c2")
     more = spark.range(50000, 51000).select(F.xxhash64("id").alias("key_hash"))
-    cuckoo.update_shards(more, d1, d2, n_shards=8)
+    cuckoo.update_shards(more, d1, d2, n_shards=8, width=8)
     both = spark.range(0, 5000).union(spark.range(50000, 51000)).select(
         F.xxhash64("id").alias("url_hash"))
     assert cuckoo.maybe_seen(both, d2, n_shards=8).filter(
